@@ -162,7 +162,7 @@ def ivf_lloyd_topk(
     by a pure-Column array_min — no join, stays in codegen — and each
     query probes its ``nprobe`` nearest centroids. Every step is
     integer/rounded-double arithmetic an oracle replays exactly, so
-    unlike the Spark-ML variant this IVF is hash-checkable end to end."""
+    this IVF is hash-checkable end to end."""
     emb = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -510,94 +510,6 @@ def pq_rerank_topk(
     scored = (
         emb.join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 4
-            ).alias("cos_sim"),
-        )
-    )
-    return _ranked_topk(scored, k)
-
-
-def ivf_kmeans_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    fit_sample_rows: int = 20_000,
-) -> DataFrame:
-    """IVF top-k with learned cells: KMeans (Spark ML) trains the
-    coarse quantizer ON A SAMPLE (standard IVF practice — a coarse
-    quantizer needs ~10³ points per cell, not the corpus; a full-corpus
-    fit at 100 TB would be a multi-pass ML job over everything). Every
-    corpus vector is assigned to its cell; each query probes its
-    ``nprobe`` nearest centroids and scores only those cells' members.
-    The real inverted-file layout: at 100 TB the assignment is a
-    write-time partition column and a probe reads nprobe/n_cells of
-    the data. Sampled fit moves centroids slightly vs a full fit; the
-    recall@5-vs-brute-force pytest gate is the accuracy contract.
-
-    Deterministic for a fixed seed (sample is seeded, count-based
-    fraction); not SQL-expressible (learned centroids) → rows-only for
-    the driver, recall-vs-brute-force asserted in pytest."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    base = widen_if_narrow(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-    )
-    ml_input = base.select("neighbor_id", array_to_vector("cv").alias("features"))
-    n_rows = ml_input.count()
-    fit_input = ml_input
-    if n_rows > fit_sample_rows:
-        # seeded Bernoulli sample, slightly oversampled so the fit set
-        # almost surely reaches fit_sample_rows even at high variance
-        fit_input = ml_input.sample(
-            fraction=min(1.0, 1.2 * fit_sample_rows / n_rows), seed=seed
-        )
-    model = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(fit_input)
-    centers = [
-        (int(cell), [float(x) for x in center])
-        for cell, center in enumerate(model.clusterCenters())
-    ]
-    centers_df = corpus.sparkSession.createDataFrame(
-        centers, "cell int, center array<double>"
-    )
-
-    assigned = model.transform(ml_input).select(
-        "neighbor_id", F.col("prediction").alias("cell")
-    )
-    c = base.join(assigned, "neighbor_id").withColumn("cn", norm(F.col("cv")))
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
-    # each query → its nprobe nearest cells (centroid table is tiny)
-    q_cells = (
-        q.crossJoin(F.broadcast(centers_df))
-        .withColumn("c_dist", -cosine(F.col("qv"), F.col("center")))
-        .withColumn(
-            "c_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.asc("c_dist"), F.asc("cell"))
-            ),
-        )
-        .filter(F.col("c_rank") <= nprobe)
-        .select("query_id", "qv", "qn", "cell")
-    )
-    scored = (
-        c.join(F.broadcast(q_cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
             "neighbor_id",

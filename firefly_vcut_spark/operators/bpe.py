@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from firefly_vcut_spark.session import drop_checkpoint
+
 
 def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over the normalized whitespace tokens — the
@@ -97,6 +99,7 @@ def rep_table(
     lists (≤B) stay a single pure projection with no materialization,
     so small-vocab plans are unchanged."""
     cur = words.select("word", "freq", initial_rep(F.col("word")).alias("rep"))
+    stored = None
     for i in range(0, len(merges), checkpoint_every):
         block = merges[i : i + checkpoint_every]
         cur = cur.withColumn("rep", merged_rep(F.col("rep"), block))
@@ -107,6 +110,9 @@ def rep_table(
             # localCheckpoint blocks die with an executor; the training
             # loop just re-runs in that case.
             cur = cur.localCheckpoint(eager=True)
+            if stored is not None:
+                drop_checkpoint(stored)  # superseded: cur no longer reads it
+            stored = cur
     return cur
 
 
@@ -129,10 +135,10 @@ def train_bpe(
     the merge count. Without this, round r re-applied all r replaces
     to initial_rep: O(V²) total work and a linearly deepening plan —
     fatal at a real 32k-merge train."""
+    # materialize once; rounds re-scan the stored rows
     cur = words.select(
         "word", "freq", initial_rep(F.col("word")).alias("rep")
-    ).persist()
-    cur.count()  # materialize once; rounds re-scan the cache
+    ).localCheckpoint(eager=True)
     try:
         merges: list[dict] = []
         pending: list[tuple[str, str]] = []
@@ -160,12 +166,12 @@ def train_bpe(
                 nxt = cur.withColumn(
                     "rep", merged_rep(F.col("rep"), pending)
                 ).localCheckpoint(eager=True)
-                cur.unpersist()
+                drop_checkpoint(cur)
                 cur = nxt
                 pending = []
         return merges
     finally:
-        cur.unpersist()
+        drop_checkpoint(cur)
 
 
 def vocab_stats(

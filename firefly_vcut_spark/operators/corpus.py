@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from firefly_vcut_spark.session import drop_checkpoint
+
 # Knuth multiplicative constant (2^32 / phi); same family as dedup.py.
 _SPLIT_A = 2654435761
 _SPLIT_MOD = 4294967296  # 2^32
@@ -264,7 +266,9 @@ def connected_components(
             return _cc_local(sym)
         return _cc_distributed(sym, max_iter)
     finally:
-        sym.unpersist()
+        # both solvers return a result that no longer reads sym: the
+        # local one is driver rows, the distributed one a checkpoint
+        drop_checkpoint(sym)
 
 
 def _cc_local(sym: DataFrame) -> DataFrame:
@@ -344,7 +348,7 @@ def _cc_distributed(sym: DataFrame, max_iter: int) -> DataFrame:
         # itself checkpointed (lineage cut), so nothing references the
         # old labels — without this every round leaks block-manager
         # memory for the rest of the session.
-        labels.unpersist()
+        drop_checkpoint(labels)
         labels = updated
         if changed == 0:
             return labels.select("id", "component")

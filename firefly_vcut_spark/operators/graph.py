@@ -196,35 +196,37 @@ def pagerank_quantized(
       the distributed loop would pay a join + an agg exchange per
       round (~10 scheduler round-trips) for the same answer. (NOT
       the 100 TB path; the gate routes any big graph away from it.)
-    - otherwise: the (s, t, sdeg) adjacency is repartitioned on the
-      source key and cached columnar ONCE, and every round's join
-      consumes that partitioning (InMemoryTableScan preserves it), so
-      per round only the O(nodes) rank table moves — one exchange for
-      the target groupBy (plus whatever AQE does to re-key the small
-      rank side). iters is a fixed small constant, so the rounds stay
-      ONE linear DataFrame lineage — no per-round RDD checkpoint that
+    - otherwise: the (s, t, sdeg) adjacency is a join on the source
+      key, so it comes out hash-partitioned on ``s``, and every
+      round's join on ``s`` consumes that partitioning. All rounds
+      live in ONE plan, so Spark runs the adjacency's exchanges once
+      and every later round reads them through ReusedExchange; per
+      round only the O(nodes) rank table moves — one exchange for the
+      target groupBy (plus whatever AQE does to re-key the small rank
+      side). iters is a fixed small constant, so the rounds stay ONE
+      linear DataFrame lineage — no per-round RDD checkpoint that
       would demote the loop to row-format ExistingRDD scans and
-      forfeit the cached partitioning (the r4-flagged plan blemish).
+      forfeit the shared partitioning.
 
     Both solvers compute the identical fixpoint (cross-checked in
     tests/test_graph.py)."""
-    # cache the upstream edge derivation ONCE: the size gate and every
-    # round read the adjacency, not the pipeline behind it. The gate
-    # and the local path's materialization FUSE into one action —
+    # cache the upstream edge derivation for the driver-side jobs: the
+    # size gate and the distributed path's node count. The gate and
+    # the local path's materialization FUSE into one action —
     # limit(threshold+1).toPandas() (Arrow: two int64 columns, ~16 MB
     # at the 1M default — NOT driver Row objects) either returns the
     # whole edge list, which IS the local solver's input, or proves
     # the graph is gate-big with one extra row.
     edges = edges.select("u", "v").persist()
-    head = edges.limit(local_threshold + 1).toPandas()
-    if len(head) <= local_threshold:
-        try:
+    try:
+        head = edges.limit(local_threshold + 1).toPandas()
+        if len(head) <= local_threshold:
             return _pagerank_local_frame(
                 edges.sparkSession, head, iters, scale
             )
-        finally:
-            edges.unpersist()
-    return _pagerank_distributed(edges, iters, scale)
+        return _pagerank_distributed(edges, iters, scale)
+    finally:
+        edges.unpersist()
 
 
 def _pagerank_local_frame(
@@ -259,50 +261,21 @@ def _pagerank_local_frame(
     )
 
 
-# the distributed rounds' result is lazy, so its (adj, deg) caches
-# must outlive this call — a one-slot retirement queue bounds the
-# leak across repeated invocations to the latest graph's caches
-_LIVE_GRAPH_CACHES: list = []
-
-
-def _retire_graph_caches() -> None:
-    while _LIVE_GRAPH_CACHES:
-        _LIVE_GRAPH_CACHES.pop().unpersist()
-
-
 def _pagerank_distributed(
     edges: DataFrame, iters: int, scale: int
 ) -> DataFrame:
-    """Columnar join-agg rounds over a once-partitioned cached
-    adjacency — the at-scale path (see pagerank_quantized)."""
-    _retire_graph_caches()
-    deg = degrees(edges).persist()
+    """Columnar join-agg rounds over a source-partitioned adjacency
+    that every round shares — the at-scale path (see
+    pagerank_quantized)."""
+    deg = degrees(edges)
     both = edges.select(
         F.col("u").alias("s"), F.col("v").alias("t")
     ).unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-    adj = (
-        both.join(
-            deg.withColumnRenamed("node", "s").withColumnRenamed(
-                "deg", "sdeg"
-            ),
-            "s",
-        )
-        .repartition("s")
-        .persist()
+    adj = both.join(
+        deg.withColumnRenamed("node", "s").withColumnRenamed("deg", "sdeg"),
+        "s",
     )
-    # materialize the cache BEFORE planning the rounds: an unfilled
-    # InMemoryRelation reports unknown partitioning (its child is a
-    # pending AdaptiveSparkPlan), so every round's join would plant an
-    # ENSURE_REQUIREMENTS re-exchange of the big side — the exact
-    # shuffle this cache exists to avoid. Once filled, the rounds see
-    # hashpartitioning(s) and only the rank side moves.
-    adj.count()
     n_nodes = deg.count()
-    # adj and deg are filled: the gate-persisted edge list is no
-    # longer referenced by anything downstream — free it now; the two
-    # small caches retire on the NEXT distributed call
-    edges.unpersist()
-    _LIVE_GRAPH_CACHES.extend([adj, deg])
     base = (3 * scale // _DAMP_DEN) // n_nodes
     ranks = deg.select(
         "node", F.lit(scale // n_nodes).cast("long").alias("pr")

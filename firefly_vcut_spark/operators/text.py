@@ -4,7 +4,7 @@ All pure-Column (JVM, codegen) — no Python in the hot path."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from firefly_vcut_spark.operators.dedup import normalized_text
@@ -293,16 +293,6 @@ def merge_postings(deltas: DataFrame) -> DataFrame:
     )
 
 
-# the scored result is lazy, so its doc_bucket cache must outlive the
-# call — one-slot retirement bounds the leak to the latest corpus
-_LIVE_DSIR_CACHES: list = []
-
-
-def _retire_dsir_cache() -> None:
-    while _LIVE_DSIR_CACHES:
-        _LIVE_DSIR_CACHES.pop().unpersist()
-
-
 def dsir_importance_scores(
     docs: DataFrame, target_filter: Column, n_buckets: int = 64
 ) -> DataFrame:
@@ -316,18 +306,15 @@ def dsir_importance_scores(
     - ONE explode produces (doc_id, is_target, bucket) with bucket =
       charfold(gram) mod n_buckets — a pure map-side projection —
       and is partial-aggregated ONCE into (doc_id, is_target, hb, m)
-      counts, which are PERSISTED: the model collect fills the cache
-      and the scoring pass reads it, so the corpus is tokenized and
-      hashed exactly once (a broadcast-subquery build is a separate
-      execution, so plain exchange reuse cannot deliver this). The
-      cached featurization is ≤ n_buckets ints per doc — orders of
-      magnitude smaller than the text it replaces — and retires on
-      the next call (one-slot queue, same pattern as the graph
-      caches).
+      counts. The model fit and the scoring pass both read that
+      aggregate inside the returned plan, so Spark runs its exchange
+      once and the second consumer reads it through ReusedExchange:
+      the corpus is tokenized and hashed exactly once, and the
+      builder runs no job.
     - Both models fall out of one n_buckets-row rollup of the shared
-      aggregate (collected driver-side like the char_lm fit); λ is
-      computed on that tiny table IN-PLAN with F.log (JVM log parity
-      with the oracle's ln) and BROADCAST back.
+      aggregate; the corpus totals are a window over that tiny table,
+      λ is computed on it with F.log (JVM log parity with the
+      oracle's ln) and BROADCAST back.
     - Per-bucket log-ratios are quantized to integer micro-nats, so
       the per-doc sum is an INTEGER aggregation — partial-agg order
       can never flip the rounded weight.
@@ -365,45 +352,40 @@ def dsir_importance_scores(
     ).select(
         "doc_id",
         "is_target",
-        (charfold_hash(F.col("g")) % n_buckets).alias("hb"),
+        # hb is never null (grams are non-null strings); coalesce
+        # tells the optimizer so. A nullable hb would get a not-null
+        # filter inferred from the scoring join on ONE consumer only,
+        # and the two consumers' differing subtrees would block the
+        # reuse of their shared exchange below.
+        F.coalesce(charfold_hash(F.col("g")) % n_buckets, F.lit(0)).alias("hb"),
     )
-    # the ONE shared aggregate both the fit and the scoring hang off
-    _retire_dsir_cache()
-    doc_bucket = (
-        bucketed.groupBy("doc_id", "is_target", "hb")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .persist()
+    # the ONE shared aggregate both the fit and the scoring hang off:
+    # both consumers sit in the returned plan, so its exchange runs once
+    doc_bucket = bucketed.groupBy("doc_id", "is_target", "hb").agg(
+        F.count(F.lit(1)).alias("m")
     )
-    model_rows = (
-        doc_bucket.groupBy("hb")
-        .agg(
-            F.sum("m").alias("r"),
-            F.sum(
-                F.when(F.col("is_target"), F.col("m")).otherwise(F.lit(0))
-            ).alias("t"),
-        )
-        .collect()  # n_buckets rows; this action fills the cache
+    model = doc_bucket.groupBy("hb").agg(
+        F.sum("m").alias("r"),
+        F.sum(
+            F.when(F.col("is_target"), F.col("m")).otherwise(F.lit(0))
+        ).alias("t"),
     )
-    tr = sum(int(r["r"]) for r in model_rows)
-    tt = sum(int(r["t"]) for r in model_rows)
-    spark = docs.sparkSession
-    model_df = spark.createDataFrame(
-        [(int(r["hb"]), int(r["r"]), int(r["t"])) for r in model_rows],
-        schema="hb long, r long, t long",
-    )
-    lam_df = model_df.select(
+    # corpus totals as a window over the n_buckets-row model: one
+    # single-partition pass, no driver round trip
+    everything = Window.partitionBy()
+    tr, tt = F.sum("r").over(everything), F.sum("t").over(everything)
+    lam_df = model.select(
         "hb",
         F.round(
             F.log(
-                ((F.col("t") + F.lit(1.0)) / (F.lit(tt) + F.lit(n_buckets)))
-                * ((F.lit(tr) + F.lit(float(n_buckets))) / (F.col("r") + F.lit(1.0)))
+                ((F.col("t") + F.lit(1.0)) / (tt + F.lit(n_buckets)))
+                * ((tr + F.lit(float(n_buckets))) / (F.col("r") + F.lit(1.0)))
             )
             * 1e6
         )
         .cast("long")
         .alias("lam"),
     )
-    _LIVE_DSIR_CACHES.append(doc_bucket)
     return (
         doc_bucket.join(F.broadcast(lam_df), "hb")
         .groupBy("doc_id")

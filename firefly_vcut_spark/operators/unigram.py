@@ -55,16 +55,6 @@ MAX_WORD_LEN = 12  # DP unroll depth of the SQL oracle; words longer
 #                    (a real tokenizer splits such words upstream)
 COST_SCALE = 1_000_000  # micro-nats
 
-# the span aggregate is read by three bounded consumers (singles
-# filter, top-K multis, total); cache it once per fit and retire the
-# previous corpus's cache — the DSIR/graph one-slot discipline
-_LIVE_SPAN_CACHES: list = []
-
-
-def _retire_span_cache() -> None:
-    while _LIVE_SPAN_CACHES:
-        _LIVE_SPAN_CACHES.pop().unpersist()
-
 
 def piece_scores(
     words: DataFrame,
@@ -98,20 +88,15 @@ def piece_scores(
         .groupBy("piece")
         .agg(F.sum("freq").cast("long").alias("weight"))
     )
-    # cache the span aggregate ONCE: three consumers (singles filter,
-    # top-K multis, total) would otherwise each re-derive the corpus
-    # tokenize+explode subtree — 4 corpus passes at scale. Top-K goes
-    # through orderBy().limit() = TakeOrdered (distributed partial
-    # top-K), NOT a single-partition rank window: the span table is
-    # vocab-class for alphabetic text but can reach ~|corpus 4-grams|
-    # for large-alphabet (CJK) corpora, where one-partition ranking
-    # would be the bottleneck.
-    # retire BEFORE persisting: caching matches on the logical plan,
-    # so unpersisting the previous (identical-plan) fit afterwards
-    # would evict the fresh cache too
-    _retire_span_cache()
-    spans = spans.persist()
-    _LIVE_SPAN_CACHES.append(spans)
+    # the span aggregate's exchange runs ONCE: its three consumers
+    # (singles filter, top-K multis, total) sit in one plan, and Spark
+    # reuses the shared exchange (ReusedExchange) instead of
+    # re-deriving the corpus tokenize+explode subtree per consumer.
+    # Top-K goes through orderBy().limit() = TakeOrdered (distributed
+    # partial top-K), NOT a single-partition rank window: the span
+    # table is vocab-class for alphabetic text but can reach ~|corpus
+    # 4-grams| for large-alphabet (CJK) corpora, where one-partition
+    # ranking would be the bottleneck.
     singles = spans.filter(F.length("piece") == 1)
     multis = (
         spans.filter(F.length("piece") >= 2)

@@ -730,9 +730,8 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     DETERMINISTIC sample-fit Lloyd path (operators/ann.ivf_lloyd_topk):
     hash-ordered fit sample, 3 quantized Lloyd iterations on the
     driver, array_min cell assignment, 2-centroid probe. Fully
-    hash-checked: the oracle unrolls the identical Lloyd fit in SQL.
-    The Spark-ML KMeans variant (ivf_kmeans_topk) remains as an
-    operator with its own recall-vs-brute-force pytest gate."""
+    hash-checked: the oracle unrolls the identical Lloyd fit in SQL;
+    tests/test_extensions.py checks its recall@5 against brute force."""
     e = load_table(spark, sf_dir, "embeddings")
     return ivf_lloyd_topk(e, e.filter(F.col("vec_id") % 50 == 0), k=5)
 

@@ -35,10 +35,24 @@ _CHECKS = [
 ]
 
 
+def _reused_plan(df: DataFrame):
+    """The physical plan as it will run, with shared exchanges reused.
+
+    Before execution, AQE's current plan gives every consumer of a
+    shared subtree its own exchange copy; AQE reuses them at run time
+    (its stage cache). Applying Spark's own reuse rule up front turns
+    the copies into the ReusedExchange pointers the run will use."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    jvm = df.sparkSession._jvm
+    return jvm.org.apache.spark.sql.execution.reuse.ReuseExchangeAndSubquery.apply(plan)
+
+
 def lint_plan(df: DataFrame, max_exchanges: int = 6) -> list[str]:
     """Return a list of 'code: message' findings for the DataFrame's
     executed plan (empty list = no anti-pattern detected)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _reused_plan(df).toString()
     findings = []
     for marker, code, msg in _CHECKS:
         if marker in plan:
@@ -46,7 +60,8 @@ def lint_plan(df: DataFrame, max_exchanges: int = 6) -> list[str]:
     # count DISTINCT exchange nodes: the plan string reprints a cached
     # (InMemoryRelation) subtree under every reference, so the same
     # physical exchange — one [plan_id=N] — can appear many times while
-    # executing once. ReusedExchange nodes are pointers, not exchanges.
+    # executing once. ReusedExchange nodes are pointers, not exchanges:
+    # a subtree shared by several consumers of one plan runs once.
     import re
 
     ex_nodes = set()

@@ -26,16 +26,6 @@ _TOPK = 10
 # head but stays on terms with plenty of matches
 _QLO, _QHI = 20, 24
 
-# the lazy result reads the tf cache; one-slot retirement bounds the
-# leak to the latest corpus (same pattern as the DSIR/graph caches)
-_LIVE_SEARCH_CACHES: list = []
-
-
-def _retire_search_cache() -> None:
-    while _LIVE_SEARCH_CACHES:
-        _LIVE_SEARCH_CACHES.pop().unpersist()
-
-
 _NORM = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 _TOKS = f"string_split({_NORM}, ' ')"
 
@@ -93,7 +83,8 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query selection, every score, and the ranked cut.
 
     Scale: ONE token explode feeds tf; doc lengths and df are rollups
-    of that same aggregate; corpus stats are a 1-row broadcast; the
+    of that same aggregate, whose exchange Spark computes once and
+    reuses for every consumer (ReusedExchange); corpus stats are a 1-row broadcast; the
     per-term rank is a window over only the matching postings (query
     terms broadcast). Ordering compares the ROUNDED score so the
     boundary is engine-stable."""
@@ -103,13 +94,7 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("term")
     )
-    _retire_search_cache()
-    tf = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
-    _LIVE_SEARCH_CACHES.append(tf)
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -234,7 +219,7 @@ def search_bm25_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     can outrank the source): the eval MEASURES that, deterministically.
 
     Scale: same single token-explode feeding tf as search_bm25_topk
-    (cached, one-slot retirement); the query-term table is O(queries x
+    (one exchange, reused by every consumer); the query-term table is O(queries x
     3) and broadcasts into the postings join; per-query scoring
     aggregates O(matching postings) rows keyed on (qid, doc); the
     relevant-rank filter is a window over each query's candidate set.
@@ -246,13 +231,7 @@ def search_bm25_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("term")
     )
-    _retire_search_cache()
-    tf = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
-    _LIVE_SEARCH_CACHES.append(tf)
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "firefly_vcut_spark") -> SparkSession:
@@ -50,3 +50,13 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+def drop_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint()``ed DataFrame.
+
+    ``DataFrame.unpersist()`` does nothing here: it drops cache-manager
+    entries, while a local checkpoint's blocks belong to the RDD behind
+    the DataFrame's LogicalRDD. Only call this once nothing still to
+    run reads ``df``."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -12,15 +12,9 @@ cuts each sweep's wall ~4-6x — which is what keeps the whole suite
 inside the driver's verify window (r11 VERDICT item 4: `tests_ok`
 read false only because the 45-50 min suite outlived the window).
 
-Queries whose operators share a module-level retire-on-next-call
-persist queue (_LIVE_*_CACHES in operators/text.py, operators/
-unigram.py, operators/graph.py, plans/search_sql.py) are grouped so
-same-family queries run sequentially within one pool task: two
-concurrent same-family queries could retire each other's live cache
-mid-plan (still correct — lineage recomputes — but it would re-run
-the heavy subtree and defeat the overlap). Distinct families share
-nothing: oracle.compare() builds a fresh DuckDB connection per call
-and query builds never mutate session conf.
+Every query is its own pool task: query builds hold no module-level
+state, never mutate session conf, and oracle.compare() builds a fresh
+DuckDB connection per call, so concurrent checks share nothing.
 """
 
 from __future__ import annotations
@@ -32,44 +26,20 @@ from concurrent.futures import ThreadPoolExecutor
 SWEEP_THREADS = int(os.environ.get("SPARK_GRAFT_SWEEP_THREADS", "8"))
 
 
-def cache_family(name: str) -> str | None:
-    """Queries sharing a module-level retire-on-next-call cache queue
-    — must not run concurrently with each other (see module docstring)."""
-    if "unigram" in name or "tokenizer" in name:
-        return "unigram"
-    if "graph" in name:
-        return "graph"
-    if "bm25" in name or name.startswith("search_"):
-        return "search"
-    if "dsir" in name:
-        return "dsir"
-    return None
-
-
-def run_grouped(
+def run_pooled(
     names: Iterable[str],
     check: Callable[[str], object],
     threads: int = SWEEP_THREADS,
 ) -> dict[str, object]:
-    """Run ``check(name)`` for every name on a thread pool, cache
-    families grouped into one sequential task each. Returns
+    """Run ``check(name)`` for every name on a thread pool. Returns
     {name: result-or-captured-exception}; the caller decides how to
     surface failures (exceptions are captured, never swallowed)."""
-    groups: dict[str, list[str]] = {}
-    for n in names:
-        groups.setdefault(cache_family(n) or f"solo:{n}", []).append(n)
 
-    def run_group(group: list[str]) -> list[tuple[str, object]]:
-        out: list[tuple[str, object]] = []
-        for n in group:
-            try:
-                out.append((n, check(n)))
-            except BaseException as e:  # noqa: BLE001 — re-raised by caller
-                out.append((n, e))
-        return out
+    def run_one(name: str) -> tuple[str, object]:
+        try:
+            return name, check(name)
+        except BaseException as e:  # noqa: BLE001 — re-raised by caller
+            return name, e
 
-    results: dict[str, object] = {}
     with ThreadPoolExecutor(max_workers=threads) as ex:
-        for chunk in ex.map(run_group, groups.values()):
-            results.update(dict(chunk))
-    return results
+        return dict(ex.map(run_one, names))

@@ -93,6 +93,22 @@ def test_rep_table_blocks_equal_single_projection(spark):
         assert blocked == one
 
 
+def test_bpe_frees_superseded_checkpoints(spark):
+    """Training keeps no stored rows once it returns; a blocked
+    rep_table keeps only the checkpoint its result reads."""
+    from firefly_vcut_spark.operators.bpe import rep_table
+
+    def persistent() -> int:
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    words = _words(spark, [("banana", 7), ("bandana", 5), ("ananas", 3)])
+    before = persistent()
+    merges = [(m["a"], m["b"]) for m in train_bpe(words, 8, checkpoint_every=2)]
+    assert persistent() == before
+    rep_table(words, merges, checkpoint_every=1).collect()
+    assert persistent() <= before + 1
+
+
 def test_vocab_stats_counts_merged_symbols(spark):
     words = _words(spark, [("abab", 2), ("ab", 1)])
     merges = train_bpe(words, 1)  # learns (a, b) with weight 5

@@ -99,6 +99,26 @@ def test_connected_components_known_graph(spark, threshold):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 10: 10, 11: 10}
 
 
+def _persistent_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_connected_components_frees_its_checkpoints(spark):
+    """Storage held by a call returns to the block manager: the local
+    solver keeps nothing, the distributed one only the checkpoint its
+    result reads. DataFrame.unpersist() is a no-op on a checkpoint, so
+    this fails if a superseded round is released that way."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (5, 6), (9, 10)],
+        ["id_a", "id_b"],
+    )
+    before = _persistent_rdds(spark)
+    cp.connected_components(edges).collect()
+    assert _persistent_rdds(spark) == before
+    cp.connected_components(edges, local_threshold=0).collect()
+    assert _persistent_rdds(spark) <= before + 1
+
+
 def test_connected_components_orientation_invariant(spark):
     """Flipping every edge's direction must not change the clustering
     (the operator symmetrizes internally)."""

@@ -242,28 +242,6 @@ def test_char_lm_flags_gibberish(spark):
     assert scores[99] < min(in_dist) - 1.0, scores
 
 
-def test_ann_ivf_spark_ml_kmeans_recall(spark, sf_dir):
-    """The Spark-ML KMeans IVF operator (the alternative quantizer to
-    the deterministic Lloyd path the registry query runs): scored
-    pairs must agree with brute force, recall@5 reasonable."""
-    from firefly_vcut_spark.operators.ann import ivf_kmeans_topk
-    from firefly_vcut_spark.sources.catalog import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    bf = {}
-    for r in QS["ann_bruteforce_topk"].fn(spark, sf_dir).collect():
-        bf.setdefault(r.query_id, {})[r.neighbor_id] = r.cos_sim
-    rows = ivf_kmeans_topk(e, e.filter(F.col("vec_id") % 50 == 0), k=5).collect()
-    assert rows
-    hits = total = 0
-    for r in rows:
-        if r.neighbor_id in bf.get(r.query_id, {}):
-            assert bf[r.query_id][r.neighbor_id] == r.cos_sim
-            hits += 1
-        total += 1
-    assert hits / total >= 0.3, f"recall@5 too low: {hits}/{total}"
-
-
 def test_funnel_ordered_semantics(spark):
     """Known micro-timeline: click before any view doesn't qualify;
     click within 30 min of a view does; purchase qualifies only after

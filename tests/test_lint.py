@@ -84,20 +84,16 @@ def test_silent_on_tuned_registry_plans(spark, sf_dir):
 #                  algorithm.
 _LINT_ALLOW: dict[str, set[str]] = {
     "a6_insert_ignore": {"exchange-count"},  # multi-stage: anti-join + dedup + union
-    "agg_audience_overlap": {"exchange-count"},  # multi-stage: 3 per-type distinct aggs
     "agg_cms_join_size_estimate": {"exchange-count"},  # multi-stage: 2 sketch builds + join
     "agg_dq_expectations": {"exchange-count"},  # multi-stage: per-rule agg union
     "agg_graph_triangles": {"exchange-count"},  # multi-stage: edges + orientation + wedge join
-    "agg_grouped_ols_by_segment": {"exchange-count"},  # multi-stage: per-segment moments + fit
-    "agg_incremental_join_mv": {"exchange-count", "sort-merge-join"},  # big-big by design: bootstrap state join + full-outer MV-key merge; delta joins ARE broadcast
+    "agg_incremental_join_mv": {"sort-merge-join"},  # big-big by design: bootstrap state join + full-outer MV-key merge; delta joins ARE broadcast
     "agg_incremental_mv_merge": {"sort-merge-join"},  # big-big SMJ: full-outer delta merge can't broadcast
-    "agg_item_cooccurrence": {"exchange-count"},  # multi-stage: baskets + pair agg + count joins
     "agg_kmv_click_purchase_overlap": {"exchange-count"},  # multi-stage: 2 sketch builds + algebra
     "ann_ivf_recall": {"exchange-count"},  # eval harness: composes the full IVF + brute-force pipelines by design
     "corpus_centroid_assignment": {"unpushed-filter"},  # expr-filter: embedding array expressions
     "corpus_cluster_safe_split": {"exchange-count", "sort-merge-join"},  # big-big SMJ on cluster id; CC chain is multi-stage
     "corpus_dup_span_removal": {"unpushed-filter"},  # expr-filter: tokenization size predicate
-    "corpus_prepare_manifest": {"exchange-count"},  # multi-stage: dedup chain + split + stats
     "corpus_temperature_mixture": {"sort-merge-join"},  # big-big SMJ: per-source sampled union at scale
     "dedup_allpairs_prefix": {"exchange-count", "unpushed-filter"},  # multi-stage by design (df + prefix + verify); expr-filter on token arrays
     "dedup_lsh_band_tuning": {"exchange-count", "unpushed-filter"},  # eval harness: inherits the AllPairs chain's findings (allowlisted on its own above); the sweep adds only a scalar agg + 6-row unpivot
@@ -107,7 +103,7 @@ _LINT_ALLOW: dict[str, set[str]] = {
     "ml_kmeans_full_lloyd": {"unpushed-filter"},  # expr-filter: isnotnull on the expression-derived cell join key (argmin over embedding) — not a scan predicate
     "q8_market_share": {"exchange-count"},  # multi-stage: 6-table star + year rollup
     "search_bm25_mrr": {"exchange-count"},  # multi-stage by design: same tf/dl/df rollup chain as search_bm25_topk plus the per-query (qid) exchange shared by score aggregate and rank window
-    "search_bm25_topk": {"exchange-count"},  # multi-stage by design: tf/dl/df rollups off one cached aggregate + doc-keyed score join + per-term rank window; dl is O(docs) so it must stay a keyed join (not broadcast) at scale
+    "search_bm25_topk": {"exchange-count"},  # multi-stage by design: tf/dl/df rollups off one shared tf aggregate (its exchange reused) + doc-keyed score join + per-term rank window; dl is O(docs) so it must stay a keyed join (not broadcast) at scale
     "text_nb_langid_confusion": {"exchange-count"},  # multi-stage: train/apply/confusion passes
     "win_rolling_active_users": {"unpushed-filter"},  # expr-filter: date_trunc(ts) join key
 }
@@ -154,3 +150,26 @@ def test_exchange_count_dedups_cached_subtrees(spark):
         assert not any(f.startswith("exchange-count") for f in findings), findings
     finally:
         df.unpersist()
+
+
+def test_exchange_count_dedups_reused_exchanges(spark):
+    """An UNCACHED aggregate read by three consumers of one plan runs
+    its exchange once (the copies become ReusedExchange) — count once."""
+    agg = spark.range(100000).withColumn("k", F.col("id") % 7).groupBy("k").count()
+    tripled = agg.union(agg).union(agg)
+    findings = lint_plan(tripled, max_exchanges=1)
+    assert not any(f.startswith("exchange-count") for f in findings), findings
+
+
+def test_exchange_count_fires_on_distinct_exchanges(spark):
+    """Seven aggregates on seven different keys are seven exchanges:
+    reuse must not hide them."""
+    base = spark.range(100000)
+    parts = [
+        base.groupBy((F.col("id") % (m + 2)).alias("k")).count() for m in range(7)
+    ]
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.union(p)
+    findings = lint_plan(df, max_exchanges=6)
+    assert any(f.startswith("exchange-count: 7 exchanges") for f in findings), findings

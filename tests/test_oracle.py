@@ -18,7 +18,7 @@ import pytest
 
 from firefly_vcut_spark.oracle import compare
 from firefly_vcut_spark.plans import all_queries
-from tests.sweep_util import run_grouped
+from tests.sweep_util import run_pooled
 
 QUERIES = all_queries()
 
@@ -69,7 +69,7 @@ def _check_one(spark, sf_dir: str, name: str) -> None:
 def sweep_results(spark, sf_dir) -> dict[str, object]:
     """name -> None (pass) or the captured exception, from one
     thread-pooled pass over the whole registry."""
-    return run_grouped(
+    return run_pooled(
         sorted(QUERIES), lambda name: _check_one(spark, sf_dir, name)
     )
 

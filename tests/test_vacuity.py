@@ -18,7 +18,7 @@ from firefly_vcut_spark.plans import all_queries
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])  # repo root for tools/
 
-from tests.sweep_util import run_grouped  # noqa: E402
+from tests.sweep_util import run_pooled  # noqa: E402
 from tools.vacuity_audit import zero_nodes  # noqa: E402
 
 # name -> why a zero-output operator is intended/accepted at sf0.001.
@@ -65,7 +65,7 @@ def audit_registry(
         return zero_nodes(df._jdf.queryExecution().executedPlan())
 
     try:
-        results = run_grouped(list(queries), check)
+        results = run_pooled(list(queries), check)
         offenders: dict[str, list[str]] = {}
         stale: list[str] = []
         for name in queries:
@@ -116,7 +116,7 @@ def test_all_queries_nonempty_at_sf01():
         name: q for name, q in all_queries().items()
         if "may-be-empty" not in q.tags
     }
-    results = run_grouped(
+    results = run_pooled(
         list(qs), lambda name: qs[name].fn(spark, sf01).limit(1).count()
     )
     empty = []

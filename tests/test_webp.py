@@ -114,7 +114,7 @@ def test_decode_image_real_sniffs_webp():
 
 
 try:
-    from hypothesis import given, settings, strategies as st
+    from hypothesis import example, given, settings, strategies as st
 
     _HAS_HYPOTHESIS = True
 except ImportError:  # pragma: no cover
@@ -131,12 +131,19 @@ if _HAS_HYPOTHESIS:
         ncolors=st.sampled_from([None, 2, 5, 16]),
         mode=st.integers(0, len(MODES) - 1),
     )
+    @example(w=15, h=18, seed=0, ncolors=None, mode=6)  # 270 colors, palette mode
     def test_roundtrip_hypothesis(w, h, seed, ncolors, mode):
         """Property fuzz across geometry x palette x encode mode: the
         decoder must invert every spec-legal stream the encoder can
         produce, bit-exactly."""
         rgba = _img(w, h, ncolors, seed)
-        _, kw = MODES[mode]
+        name, kw = MODES[mode]
+        if name == "palette" and len({rgba[i : i + 4] for i in range(0, len(rgba), 4)}) > 256:
+            # a VP8L palette holds at most 256 colors: no legal stream
+            # exists, and the encoder must refuse rather than emit one
+            with pytest.raises(AssertionError, match="> 256 colors"):
+                encode_vp8l(rgba, w, h, **kw)
+            return
         dw, dh, ch, out = decode_vp8l(encode_vp8l(rgba, w, h, **kw))
         assert (dw, dh, ch) == (w, h, 4)
         assert out == rgba
